@@ -329,7 +329,7 @@ final case class PinProcedure(catalog: GraftCatalog)
   * high-water batchId from the `#txnhw` ledger (Delta's
   * `txnVersion`), NULL when the writer never stamped a commit — what
   * an external replayer consults to resume exactly-once without
-  * guessing, O(1) header read on sealed tables. */
+  * guessing, O(1): one header read of the head. */
 final case class TxnVersionProcedure(catalog: GraftCatalog)
   extends GraftProcedure(catalog) {
   override def name(): String = "txn_version"
@@ -357,9 +357,7 @@ final case class TxnVersionProcedure(catalog: GraftCatalog)
   * bundle — file/byte/DV counts, every declared policy half, and the
   * PROTOCOL GATE (the reader/writer features a foreign engine must
   * implement to touch the table). Delta's `DESCRIBE DETAIL` on this
-  * substrate; `size_bytes` is NULL when any retained line predates
-  * the size annotation (all-or-nothing, like the metadata row
-  * count). */
+  * substrate; `size_bytes` sums the data files' recorded sizes. */
 final case class DetailProcedure(catalog: GraftCatalog)
   extends GraftProcedure(catalog) {
   override def name(): String = "detail"
@@ -380,7 +378,7 @@ final case class DetailProcedure(catalog: GraftCatalog)
       StructField("version", IntegerType, nullable = false),
       StructField("num_files", IntegerType, nullable = false),
       StructField("size_bytes",
-        org.apache.spark.sql.types.LongType, nullable = true),
+        org.apache.spark.sql.types.LongType, nullable = false),
       StructField("num_deletion_vectors", IntegerType,
         nullable = false),
       StructField("checks", StringType, nullable = false),
@@ -395,7 +393,7 @@ final case class DetailProcedure(catalog: GraftCatalog)
       StructField("reader_features", StringType, nullable = false),
       StructField("writer_features", StringType, nullable = false))),
       Array[Any](d.version, d.numFiles,
-        d.sizeBytes.map(java.lang.Long.valueOf).orNull,
+        d.sizeBytes,
         d.numDeletionVectors, str(d.checks), str(d.statCols),
         str(d.bloomCols), str(d.clusterCols),
         d.checkpointEvery.map(java.lang.Integer.valueOf).orNull,

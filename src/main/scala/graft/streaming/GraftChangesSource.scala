@@ -112,9 +112,8 @@ final class GraftChangesSource(
     * the budget fills. Admission control, not semantics — a single
     * version (or file) larger than the budget still streams WHOLE in
     * its own trigger (offsets are version-granular: a mid-version
-    * split cannot be represented, so it is never attempted), and a
-    * version with pre-size-tracking lines conservatively fills the
-    * trigger. Composes with maxFilesPerTrigger/maxVersionsPerTrigger
+    * split cannot be represented, so it is never attempted).
+    * Composes with maxFilesPerTrigger/maxVersionsPerTrigger
     * (tightest cap wins). */
   private val maxBytesPerTrigger: Option[Long] =
     opts.get("maxbytespertrigger").map(_.toLong)
@@ -134,10 +133,10 @@ final class GraftChangesSource(
     *    after source creation stream (persisted likewise);
     *  - `startingTimestamp = <epoch-millis | ISO-8601>`: resolved to
     *    the FIRST version committed at or after the instant
-    *    ([[Versioned.versionAtOrAfterInstant]] — strict, recorded
-    *    `#ts` instants only; legacy tables refuse loudly; a timestamp
-    *    after the last commit refuses loudly), then exactly the
-    *    explicit-version semantics, anchor persisted.
+    *    ([[Versioned.versionAtOrAfterInstant]] — recorded `#ts`
+    *    instants; a timestamp after the last commit refuses loudly),
+    *    then exactly the explicit-version semantics, anchor
+    *    persisted.
     */
   private val startingVersionOpt: Option[String] =
     opts.get("startingversion")
@@ -262,8 +261,9 @@ final class GraftChangesSource(
       StructField("_change_type", StringType, nullable = false) :+
       StructField("_commit_version", IntegerType, nullable = false) :+
       // derived from the manifest's recorded #ts commit instant
-      // (monotonic with versions); null only for pre-tracking
-      // manifests — Delta CDF's _commit_timestamp, on this substrate
+      // (monotonic with versions); null only when the version's
+      // manifest has since expired — Delta CDF's _commit_timestamp,
+      // on this substrate
       StructField("_commit_timestamp", TimestampType, nullable = true))
 
   // the initial-snapshot extent (explicit startingVersion only): the
@@ -282,7 +282,7 @@ final class GraftChangesSource(
 
   // per-line byte sizes of the anchor snapshot (byte paging) —
   // resolved once, only when the byte cap is declared
-  private lazy val snapLineSizes: Seq[Option[Long]] =
+  private lazy val snapLineSizes: Seq[Long] =
     Versioned.manifestLineSizes(spark, dir, anchor)
 
   // rate limiting: getOffset advances at most maxVersionsPerTrigger /
@@ -298,17 +298,16 @@ final class GraftChangesSource(
       if (li < snapTotal) {
         // snapshot phase: advance through the anchor's files only —
         // by count, and under the byte budget when one is declared
-        // (always at least one file per trigger; an unknown size
-        // conservatively fills the trigger)
+        // (always at least one file per trigger)
         val byFiles = math.min(li + maxFilesPerTrigger, snapTotal)
         val end = maxBytesPerTrigger match {
           case None => byFiles
           case Some(budget) =>
             var e = li + 1
-            var acc = snapLineSizes(li.toInt).getOrElse(budget)
+            var acc = snapLineSizes(li.toInt)
             var open = true
             while (open && e < byFiles) {
-              val add = snapLineSizes(e.toInt).getOrElse(budget)
+              val add = snapLineSizes(e.toInt)
               if (acc + add <= budget) { acc += add; e += 1 }
               else open = false
             }
@@ -331,7 +330,7 @@ final class GraftChangesSource(
             var open = true
             while (open && v < byVersions) {
               val add = Versioned.versionAddedBytes(spark, dir,
-                (v + 1).toInt).getOrElse(Long.MaxValue / 4)
+                (v + 1).toInt)
               if (v == from || acc + add <= budget) { acc += add; v += 1 }
               else open = false
             }
@@ -429,16 +428,14 @@ final class GraftChangesSource(
   private def stampInstants(feed: DataFrame,
       versions: Seq[Int]): DataFrame = {
     val inst = Versioned.commitInstants(spark, dir, versions)
-    val instRows = inst.toSeq.map { case (v, ts) =>
-      Row(v, ts.map(java.lang.Long.valueOf).orNull)
-    }
+    val instRows = inst.toSeq.map { case (v, ts) => Row(v, ts) }
     val instDf = spark.createDataFrame(
       new java.util.ArrayList[Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(instRows).asJava),
       StructType(Seq(
         StructField("__v", IntegerType, nullable = false),
         StructField("__ts_millis",
-          org.apache.spark.sql.types.LongType, nullable = true))))
+          org.apache.spark.sql.types.LongType, nullable = false))))
     feed.join(broadcast(instDf),
         feed("_commit_version") === instDf("__v"), "left")
       .withColumn("_commit_timestamp",
@@ -452,7 +449,6 @@ final class GraftChangesSource(
     * benign add/drop evolutions around the streamed set. */
   private def guardSchemaDrift(v: Int): Unit = {
     val (curSchema, curMap) = Versioned.schemaAndColMap(spark, dir, v)
-    if (curSchema.isEmpty) return // empty legacy version: nothing to say
     val logicalOfPhys = curMap.map(_.swap).toMap
     creationCols.foreach { case (logical, physical, dt) =>
       val currentLogical = logicalOfPhys.getOrElse(physical, physical)

@@ -509,29 +509,4 @@ class GraftChangesSourceSpec extends SparkSuite {
     // rows survive exactly once end-to-end
     assert(seen.map(_._1).sum == 15)
   }
-
-  test("startingTimestamp on a LEGACY table (a consulted manifest " +
-      "without #ts) refuses loudly instead of trusting file mtimes") {
-    val dir = tmpDir() + "/ts-legacy"
-    commitRange(dir, 0, 3)                               // v0
-    commitRange(dir, 10, 12)                             // v1
-    // strip the #ts header from v0 — the shape of a manifest written
-    // before instant tracking
-    val p = java.nio.file.Paths.get(dir, "_manifest", "v00000.txt")
-    val kept = scala.jdk.CollectionConverters.ListHasAsScala(
-      java.nio.file.Files.readAllLines(p)).asScala
-      .filterNot(_.startsWith("#ts\t"))
-    java.nio.file.Files.write(p,
-      scala.jdk.CollectionConverters.SeqHasAsJava(kept).asJava)
-    val e = intercept[Exception] {
-      spark.readStream.format("graft-changes")
-        .option("path", dir)
-        .option("startingTimestamp", "0")
-        .load()
-    }
-    assert(Iterator.iterate(e: Throwable)(_.getCause)
-      .takeWhile(_ != null).exists(t => Option(t.getMessage)
-        .exists(_.contains("predates commit-instant tracking"))),
-      e.getMessage)
-  }
 }

@@ -171,4 +171,89 @@ class VersionedProtocolSpec extends SparkSuite {
     writeManifest(dir, 0, orig)
     assert(Versioned.read(spark, dir).count() == 5)
   }
+
+  test("a PRE-FLOOR manifest refuses BY NAME on every entry point: " +
+      "read, history, TIMESTAMP AS OF, the startingTimestamp anchor, " +
+      "and a commit") {
+    def path(dir: String, name: String) =
+      java.nio.file.Paths.get(dir, "_manifest", name)
+    // rewrite one manifest file in place (and drop the local-FS
+    // checksum sidecar the raw rewrite would otherwise invalidate)
+    def edit(dir: String, name: String)(f: Seq[String] => Seq[String])
+        : Unit = {
+      val p = path(dir, name)
+      val src = scala.io.Source.fromFile(p.toFile, "UTF-8")
+      val ls = try src.getLines().filter(_.nonEmpty).toList
+        finally src.close()
+      val out = f(ls)
+      assert(out != ls, s"fixture edit of $name changed nothing")
+      java.nio.file.Files.write(p,
+        out.mkString("", "\n", "\n").getBytes("UTF-8"))
+      java.nio.file.Files.deleteIfExists(path(dir, s".$name.crc"))
+      ()
+    }
+    def table(dir: String): Unit =
+      Versioned.commit(spark, dir, (0L until 6L).map(i => (i, s"r$i"))
+        .toDF("id", "s").repartitionByRange(2, col("id")))
+    def stripHeader(h: String)(dir: String): Unit = {
+      table(dir)
+      edit(dir, "v00000.txt")(_.filterNot(_.startsWith(h)))
+    }
+    val noSize = "\t~b\\d+"
+    // (case, floor field the refusal must name, fixture)
+    val cases: Seq[(String, String, String => Unit)] = Seq(
+      ("#ts", "#ts", stripHeader("#ts\t")),
+      ("#schema", "#schema", stripHeader("#schema\t")),
+      ("#txnseal", "#txnseal", stripHeader("#txnseal\t")),
+      ("data line ~b", "~b size on data line", { dir =>
+        table(dir)
+        edit(dir, "v00000.txt")(_.map(l =>
+          if (l.startsWith("#")) l else l.replaceAll(noSize, "")))
+      }),
+      ("#dv line ~b", "~b size on a #dv line", { dir =>
+        table(dir)
+        Versioned.deleteWhereMor(spark, dir, col("id") === 1L)   // v1
+        edit(dir, "v00001.txt")(_.map(l =>
+          if (l.startsWith("#dv\t")) l.replaceAll(noSize, "") else l))
+      }),
+      ("sidecar #eof over a dropped chain", "#eof", { dir =>
+        table(dir)
+        Versioned.commit(spark, dir, Seq((9L, "r9")).toDF("id", "s"))
+        assert(Versioned.checkpointManifest(spark, dir),
+          "fixture wants a delta head to fold")                  // v1
+        edit(dir, "v00001.ckpt.txt")(_.filterNot(_.startsWith("#eof\t")))
+        java.nio.file.Files.delete(path(dir, "v00000.txt"))
+        java.nio.file.Files.deleteIfExists(path(dir, ".v00000.txt.crc"))
+        ()
+      }))
+    val farFuture = (System.currentTimeMillis() + 3600000L) * 1000L
+    cases.foreach { case (name, field, fixture) =>
+      val dir = tmpDir() + "/floor"
+      fixture(dir)
+      val head = Versioned.latestVersion(spark, dir)
+      val entryPoints: Seq[(String, () => Any)] = Seq(
+        "read" -> (() => Versioned.read(spark, dir).count()),
+        "history" -> (() => Versioned.history(spark, dir).collect()),
+        "TIMESTAMP AS OF" -> (() => Versioned.read(spark, dir,
+          Some(Versioned.versionAsOfTimestamp(spark, dir, farFuture).get))
+          .count()),
+        "startingTimestamp" -> (() => spark.readStream
+          .format("graft-changes").option("path", dir)
+          .option("startingTimestamp", "0").load()),
+        "commit" -> (() => Versioned.commit(spark, dir,
+          Seq((7L, "x")).toDF("id", "s"))))
+      entryPoints.foreach { case (entry, run) =>
+        val e = intercept[Exception](run())
+        val named = Iterator.iterate(e: Throwable)(_.getCause)
+          .takeWhile(_ != null).collectFirst {
+            case u: Versioned.UnsupportedTableFeatureException => u }
+        assert(named.exists(u => u.getMessage.contains(field) &&
+            u.getMessage.contains("format floor")),
+          s"$name / $entry: expected the named floor refusal naming " +
+            s"'$field', got $e")
+      }
+      assert(Versioned.latestVersion(spark, dir) == head,
+        s"$name: the refused commit must publish nothing")
+    }
+  }
 }
